@@ -360,7 +360,15 @@ def spill_to_parquet(df: DataFrame, prefix: str = "blow_spark_ckpt_") -> DataFra
     filter-pushed, and free of the upstream plan. Dirs are registered
     for cleanup: LRU-evicted past ``_MAX_LIVE_SPILLS`` live dirs and
     swept at process exit, so two consecutive full-catalog runs leave
-    the tempdir population flat (pinned in tests/test_materialize.py)."""
+    the tempdir population flat (pinned in tests/test_materialize.py).
+
+    The scan is read back with ``read.schema(df.schema)``: this call has
+    just written that frame, so its schema is known and the read-back
+    plans without the schema-inference job ``read.parquet`` would run.
+    Parquet scans report every column nullable, so the result's schema
+    equals what inference would give (pinned in the same test file).
+    Unlike ``sources.scan_parquet`` nothing is memoized: the spill dir is
+    new and read once, and the schema comes from the frame itself."""
     path = tempfile.mkdtemp(prefix=prefix)
     df.write.mode("overwrite").parquet(path)
     # AFTER the write (overwrite mode recreates the dir); dot-prefixed,
@@ -370,4 +378,4 @@ def spill_to_parquet(df: DataFrame, prefix: str = "blow_spark_ckpt_") -> DataFra
     while len(_live_spills) > _MAX_LIVE_SPILLS:
         old, _ = _live_spills.popitem(last=False)
         _remove_dir(old)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)

@@ -79,18 +79,18 @@ def _pair_counts(a: DataFrame, b: DataFrame) -> DataFrame:
     row pays one range comparison and raises instead — loud failure is
     the contract for a rewrite whose validity is data-bounded. Unpack
     after the aggregate is two bitwise ops on the GROUPED (≪ pre-agg)
-    rows."""
-    in_domain = (F.col("cust_a") < F.lit(1 << 31)) & (
-        F.col("cust_b") < F.lit(1 << 32)
-    )
-    pk = F.when(
-        in_domain, F.shiftleft(F.col("cust_a"), 32) + F.col("cust_b")
-    ).otherwise(
+    rows. Both keys are cast to BIGINT before the shift: on an INT
+    column ``shiftleft(x, 32)`` shifts by 32 mod 32 = 0, and the pack
+    would collapse to cust_a + cust_b, merging groups silently."""
+    cust_a = F.col("cust_a").cast("long")
+    cust_b = F.col("cust_b").cast("long")
+    in_domain = (cust_a < F.lit(1 << 31)) & (cust_b < F.lit(1 << 32))
+    pk = F.when(in_domain, F.shiftleft(cust_a, 32) + cust_b).otherwise(
         F.raise_error(
             F.lit(
-                "linkpred packed pair key: custkey >= 2^31 — beyond the "
-                "guarded pack domain (TPC-H SF ~14k); use the two-column "
-                "grouping for this scale"
+                "linkpred packed pair key: cust_a >= 2^31 or cust_b >= 2^32 "
+                "— beyond the guarded pack domain (TPC-H SF ~14k); use the "
+                "two-column grouping for this scale"
             )
         ).cast("long")
     )

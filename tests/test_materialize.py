@@ -86,6 +86,78 @@ def test_spill_lru_bound_and_eviction(spark, own_registry):
         assert os.path.isdir(p)
 
 
+def test_spill_read_back_uses_known_schema(spark, own_registry, tmp_path):
+    """The read-back takes the spilled frame's own schema: no inference
+    job, and the same schema and rows as inferring from the files."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("dec", T.DecimalType(12, 3)),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("d", T.DateType()),
+            T.StructField("arr", T.ArrayType(T.IntegerType(), False)),
+            T.StructField(
+                "st",
+                T.StructType(
+                    [
+                        T.StructField("a", T.StringType(), False),
+                        T.StructField("b", T.DoubleType()),
+                    ]
+                ),
+            ),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+            T.StructField("bin", T.BinaryType()),
+        ]
+    )
+    rows = [
+        (
+            1,
+            decimal.Decimal("1.250"),
+            datetime.datetime(2020, 1, 1, 1, 2, 3),
+            datetime.datetime(2021, 5, 5, 6, 7, 8),
+            datetime.date(2020, 2, 2),
+            [1, 2],
+            ("x", 1.5),
+            {"k": 3},
+            b"\x00\x01",
+        ),
+        (2, None, None, None, None, None, None, None, None),
+    ]
+    st = spark.sparkContext.statusTracker()
+
+    def jobs(fn):
+        before = set(st.getJobIdsForGroup(None) or [])
+        out = fn()
+        return out, len(set(st.getJobIdsForGroup(None) or []) - before)
+
+    spark.sql(
+        "CREATE TABLE spill_schema_cv (c CHAR(5), v VARCHAR(9)) USING parquet "
+        f"LOCATION '{tmp_path / 'cv'}'"
+    )
+    try:
+        spark.sql("INSERT INTO spill_schema_cv VALUES ('ab', 'xy')")
+        df = spark.createDataFrame(rows, schema).crossJoin(spark.table("spill_schema_cv"))
+        meta = {f.name: f.metadata for f in df.schema.fields}
+        assert "char(5)" in str(meta["c"]) and "varchar(9)" in str(meta["v"])
+
+        _, write_jobs = jobs(lambda: df.write.parquet(str(tmp_path / "plain")))
+        out, spill_jobs = jobs(lambda: M.spill_to_parquet(df, prefix="blow_spark_schema_test_"))
+    finally:
+        spark.sql("DROP TABLE spill_schema_cv")
+    assert spill_jobs == write_jobs
+    (path,) = M._live_spills
+    inferred = spark.read.parquet(path)
+    assert out.schema.json() == inferred.schema.json()
+    got = out.collect()
+    assert len(got) == 2 and sorted(got) == sorted(inferred.collect())
+
+
 def test_spill_sweep_all_clears_disk(spark, own_registry):
     base = spark.range(2).toDF("x")
     M.spill_to_parquet(base, prefix="blow_spark_sweep_test_")

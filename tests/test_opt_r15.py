@@ -18,7 +18,8 @@ is not visible through the oracle compare alone:
   flag instead of being documentation-only.
 - the linkpred packed pair key's in-plan domain guard: custkey beyond
   the 2³¹ pack domain raises instead of corrupting silently, and the
-  packed aggregate matches the two-column form on in-domain data.
+  packed aggregate matches the two-column form on in-domain data,
+  INT key columns included.
 """
 
 from __future__ import annotations
@@ -54,12 +55,22 @@ def test_spread_volume_noops_below_one_chunk(spark, tmp_path):
 
 
 def test_spread_volume_sizes_to_rows(spark, tmp_path):
-    # 2000 rows at 400/partition -> 5 partitions, NOT defaultParallelism
+    # 2000 rows at 1000/partition -> clamp(ceil(2000 / 1000), 1,
+    # defaultParallelism) = 2 partitions, NOT defaultParallelism: a
+    # volume target of 2 stays below the cap on any host wider than
+    # 2 cores, where it tells the volume rule from the blanket spread
+    import math
+
     from blow_spark.dedup import _spread
 
-    scan = _spill_dir(spark, tmp_path, "mid", rows=2000)
-    out = _spread(scan, per_part_rows=400)
-    assert out.rdd.getNumPartitions() == 5
+    rows, per_part_rows = 2000, 1000
+    cap = spark.sparkContext.defaultParallelism
+    want = min(max(math.ceil(rows / per_part_rows), 1), cap)
+    scan = _spill_dir(spark, tmp_path, "mid", rows=rows)
+    out = _spread(scan, per_part_rows=per_part_rows)
+    assert out.rdd.getNumPartitions() == want
+    if cap > 2:
+        assert want == 2 < cap
 
 
 def test_spread_volume_caps_at_parallelism(spark, tmp_path):
@@ -159,6 +170,20 @@ def test_pair_counts_matches_two_column_form(spark):
         .collect()
     }
     assert packed == plain and packed
+
+
+def test_pair_counts_int32_keys_do_not_merge_groups(spark):
+    # INT keys: an uncast shiftleft(cust_a, 32) shifts by 0 and packs
+    # (1, 4) and (2, 3) into the same key 5
+    from blow_spark.queries.linkage import _pair_counts
+
+    edges = spark.createDataFrame(
+        [(1, 1), (4, 1), (2, 2), (3, 2), (2, 3), (3, 3)], "c int, p int"
+    )
+    a = edges.selectExpr("c AS cust_a", "p")
+    b = edges.selectExpr("c AS cust_b", "p")
+    got = {(r.cust_a, r.cust_b): r.common_parts for r in _pair_counts(a, b).collect()}
+    assert got == {(1, 4): 1, (2, 3): 2}
 
 
 def test_pair_counts_raises_outside_pack_domain(spark):
